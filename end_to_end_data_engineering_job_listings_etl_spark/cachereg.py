@@ -1,58 +1,56 @@
-"""Session-scoped cache lifecycle: central eviction for the per-
-(session, sf_dir) memo caches (catalog._DIST_CACHE, plans/star.py's
-landing/plan/dims memos, plans/joblistings.py's star memo).
+"""Session state in one store: which frames a session keeps across
+queries, and when it lets them go.
 
-The memo convention persists frames for process lifetime — right for
-a bench/driver process that visits one or two datasets, wrong for a
-long-lived multi-tenant driver that walks many (VERDICT r4 item 4:
-"nothing calls the clear_caches hooks automatically"). This module
-wires two automatic paths:
+The reference keeps one set of star-build frames at fixed cut points
+(``dags/spark_etl_script.py:146-153``). Here every builder that keeps
+state across queries goes through the same primitive:
 
-1. **LRU dataset cap** — every ``catalog.load_table`` call records a
-   (session, sf_dir) touch; when a session has touched more than
-   $SPARK_GRAFT_CACHE_DATASETS (default 4) distinct sf_dirs, the
-   least-recently-used dataset's cached frames are evicted and
-   unpersisted. The cap is per-session, so a multi-tenant driver's
-   cache footprint is bounded by cap × per-dataset working set
-   regardless of how many datasets it walks.
-2. **Session-stop hook** — ``session.get_spark`` wraps the session's
-   ``stop`` so closing the session evicts everything it pinned first
-   (persisted frames die with the session's executors anyway, but the
-   Python-side memo dicts would otherwise retain dead DataFrame
-   handles forever — a driver-side leak).
+- ``memo(spark, sf_dir, family, key, build)`` — get-or-build. The
+  store is keyed by session, then by ``(sf_dir, family, key)``; an
+  empty ``sf_dir`` marks a session-scoped entry (the CC labels, the
+  Derby landing) that every dataset-scoped eviction also releases.
+- ``pin(df)`` — hand ``df`` to the innermost ``memo`` build in flight;
+  evicting that entry releases it (``release_pins``). Outside a build
+  ``pin`` does nothing and the caller owns the frame.
+- ``evict(spark, sf_dir, family)`` — release matching entries;
+  ``None`` is a wildcard on every axis.
 
-Eviction invalidates externally-held DataFrames from the evicted
-dataset only in the weak sense that their cached/checkpointed blocks
-are dropped: plain-persisted frames silently recompute, while
-localCheckpoint-pinned frames (operators/ids.py) FAIL-STOP on next
-access — the designed loss semantics (tests/test_edges.py exercises
-it). Re-running a registry query after eviction always rebuilds from
-source and re-pins.
+A "latest generation" holder (corpus scratch, CC labels) is an
+``evict`` of its family followed by a ``memo`` call.
 
-Modules register an evictor ``fn(spark, sf_dir)`` (either may be
-None = wildcard) at import time; ``evict`` fans out to all of them.
+Each session's entries form ONE recency order (a ``memo`` call, hit or
+miss, moves its entry to the end; a miss enters before its build runs,
+so entries a build nests — star → catalog — come after it). That order
+feeds three policies:
 
-3. **Within-dataset state budget** (r9 verdict #1 — the r9 full sf10
-   surface needed 24-name fresh-process chunks because NOTHING bounded
-   same-dataset accumulation): modules register their evictor under a
-   FAMILY name (``register_family``) and report memo activity
-   (``touch_family``) plus unmanaged-heap estimates
-   (``note_unmanaged`` — embedded Derby pages are invisible to the
-   block manager). ``query_boundary`` — called by the registry's
-   per-query wrapper, i.e. at the only point where no memo build is
-   in flight — measures pinned storage (block-manager memSize +
-   reported unmanaged bytes) and, when it exceeds
-   $SPARK_GRAFT_STATE_BUDGET_MB (default 40% of driver max heap),
-   evicts least-recently-touched families until back under budget.
-   The two most-recently-touched families are kept (same-family
-   query bursts — the registry walks families contiguously — keep
-   their memo plus the catalog scans it nests over), so the
-   steady-state bound is budget + the last two families' working
-   sets. Under budget, nothing happens: at sf≤1 the whole
-   surface fits and memo semantics are byte-identical to r9.
-   ``query_boundary`` also drops terminated streaming-query handles
-   (``spark.streams.resetTerminated()`` — retained progress buffers
-   were part of the accumulated session state).
+1. **Dataset cap** — when a session's entries span more than
+   ``DATASET_CAP`` distinct sf_dirs, the least-recently-used dataset is
+   evicted. A multi-tenant driver's footprint is then bounded by cap ×
+   per-dataset working set however many datasets it walks.
+2. **State budget** — ``query_boundary`` runs before every registry
+   query (the only point where no build is in flight). When pinned
+   storage (block-manager memSize plus ``note_unmanaged`` estimates,
+   e.g. embedded Derby pages) exceeds $SPARK_GRAFT_STATE_BUDGET_MB
+   (default 40% of driver max heap), it evicts ``(sf_dir, family)``
+   groups least-recently-used first, never the two most recent: a
+   build touches its own family and then the catalog scans it nests,
+   so protecting only the newest would evict the burst's own memo.
+   Under budget nothing happens.
+3. **Session end** — ``hook_session`` wraps ``spark.stop`` to evict
+   the session first, and every ``memo`` call prunes other sessions
+   whose SparkContext reports stopped (``sc.stop()`` bypasses the
+   hook). Stores are weakly keyed by session.
+
+Loss semantics: eviction releases pins that frames returned by earlier
+queries may still reference. Plain persists silently recompute;
+localCheckpoint pins (operators/ids.py) and the dropped Derby landing
+FAIL-STOP, because their lineage was cut on purpose. Re-running the
+registry query always rebuilds from source. Checkpoint pins are not
+downgraded to plain persists to dodge this: keeping a recompute path
+would keep the quadratic lineage the pins exist to cut.
+
+Single-threaded per session: registry queries on one session do not
+run concurrently, so a build needs no lock.
 """
 
 from __future__ import annotations
@@ -60,37 +58,30 @@ from __future__ import annotations
 import os
 import time
 import weakref
-from collections.abc import Callable
+from collections.abc import Callable, Hashable, Sequence
+from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-_Evictor = Callable[[SparkSession | None, "str | None"], None]
-_EVICTORS: list[_Evictor] = []
+DATASET_CAP = 4
 
-# family name -> evictor (a subset of _EVICTORS, addressable for the
-# within-dataset budget path)
-_FAMILIES: dict[str, _Evictor] = {}
-# per-session LRU of (sf_dir, family) memo touches, MRU last. Weakly
-# keyed for the same reason as _LRU below.
-_FAMILY_LRU: "weakref.WeakKeyDictionary[SparkSession, list[tuple[str, str]]]" = (
+
+@dataclass
+class _Entry:
+    value: object = None
+    pins: list[DataFrame] = field(default_factory=list)
+    # extra release action (Derby drops its in-memory DB), called with
+    # the owning session so the entry holds no reference to it
+    release: Callable[[SparkSession], None] | None = None
+
+
+_STORE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str, Hashable], _Entry]]" = (
     weakref.WeakKeyDictionary()
 )
-# per-session unmanaged-heap estimates, family -> bytes (embedded
-# Derby pages etc. — state the block manager can't see)
+# pin lists of the memo builds in flight, innermost last
+_BUILDS: list[list[DataFrame]] = []
+# per-session unmanaged-heap estimates, family -> bytes
 _UNMANAGED: "weakref.WeakKeyDictionary[SparkSession, dict[str, int]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-# Most-recent-last sf_dirs per live session. WEAKLY keyed by the
-# session object (ADVICE r5 item 3): a session that is stopped via
-# sc.stop() (bypassing the hooked spark.stop), never stopped, or
-# created before hook_session must not have its _LRU entry — and,
-# through the evictors, its registered memo frames — retained for
-# process lifetime. Weak keying drops the entry when the last user
-# reference dies; ``touch`` additionally prunes sessions whose
-# SparkContext reports stopped (evictors are exception-tolerant, so a
-# dead JVM can't wedge eviction).
-_LRU: "weakref.WeakKeyDictionary[SparkSession, list[str]]" = (
     weakref.WeakKeyDictionary()
 )
 
@@ -102,34 +93,98 @@ def _is_stopped(sess: SparkSession) -> bool:
         return True
 
 
-def register_evictor(fn: _Evictor) -> _Evictor:
-    """Register a module's cache-eviction hook. Idempotent per fn."""
-    if fn not in _EVICTORS:
-        _EVICTORS.append(fn)
-    return fn
+def release_pins(frames: Sequence[DataFrame]) -> None:
+    """Unpersist frames, including the checkpoint blocks behind
+    localCheckpoint-pinned ones (``DataFrame.unpersist`` can't: a
+    checkpointed frame is a ``LogicalRDD``, not a cache-manager entry —
+    its blocks are pinned at the RDD level). After release, a retained
+    handle to a checkpointed frame FAIL-STOPS on next access."""
+    for df in frames:
+        try:
+            df.unpersist()
+            plan = df._jdf.queryExecution().analyzed()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(True)
+        except Exception:  # noqa: BLE001 - release is best-effort:
+            # a stopped session's frames are already gone with its
+            # executors; eviction of a dead session must not raise
+            pass
 
 
-def register_family(family: str, fn: _Evictor) -> _Evictor:
-    """Register a module's evictor under a FAMILY name so the
-    within-dataset budget path (``query_boundary``) can evict it
-    individually. The evictor also joins the plain fan-out registry,
-    so session-stop and dataset-LRU eviction behave exactly as before.
-    """
-    _FAMILIES[family] = fn
-    return register_evictor(fn)
+def _release(sess: SparkSession, entry: _Entry) -> None:
+    release_pins(entry.pins)
+    if entry.release is not None:
+        try:
+            entry.release(sess)
+        except Exception:  # noqa: BLE001 - a dead JVM must not wedge eviction
+            pass
 
 
-def touch_family(spark: SparkSession, sf_dir: str, family: str) -> None:
-    """Record a family memo access (hit or build) for the session's
-    within-dataset LRU. Called from each module's memo chokepoint;
-    cheap (list surgery, no JVM round-trip)."""
-    lru = _FAMILY_LRU.setdefault(spark, [])
-    key = (sf_dir, family)
-    if lru and lru[-1] == key:
-        return
-    if key in lru:
-        lru.remove(key)
-    lru.append(key)
+def pin(df: DataFrame) -> DataFrame:
+    """Give ``df`` to the ``memo`` build in flight; a no-op outside one."""
+    if _BUILDS:
+        _BUILDS[-1].append(df)
+    return df
+
+
+def memo(
+    spark: SparkSession,
+    sf_dir: str,
+    family: str,
+    key: Hashable,
+    build: Callable[[], object],
+    release: Callable[[SparkSession], None] | None = None,
+):
+    """Return the session's entry for ``(sf_dir, family, key)``,
+    running ``build()`` on a miss. Frames the build ``pin``s, and
+    ``release(spark)`` if given, are released when the entry is
+    evicted; a build that raises releases its pins and leaves no entry."""
+    for sess in [s for s in list(_STORE) if s is not spark and _is_stopped(s)]:
+        evict(sess)
+    store = _STORE.setdefault(spark, {})
+    k = (sf_dir, family, key)
+    entry = store.pop(k, None)
+    if entry is not None:
+        store[k] = entry
+        return entry.value
+    entry = store[k] = _Entry(release=release)
+    if sf_dir:
+        datasets = list(dict.fromkeys(d for d, _, _ in reversed(store) if d))
+        for old in datasets[DATASET_CAP:]:
+            evict(spark, old)
+    _BUILDS.append(entry.pins)
+    try:
+        entry.value = build()
+    except BaseException:
+        store.pop(k, None)
+        _release(spark, entry)
+        raise
+    finally:
+        _BUILDS.pop()
+    return entry.value
+
+
+def evict(
+    spark: SparkSession | None = None,
+    sf_dir: str | None = None,
+    family: str | None = None,
+) -> None:
+    """Release every entry matching the scope; ``None`` is a wildcard
+    on each axis and ``evict()`` clears the process. Session-scoped
+    entries (empty sf_dir) match every sf_dir. Release failures are
+    swallowed per entry, so a dead session never wedges eviction."""
+    for sess in list(_STORE) if spark is None else [spark]:
+        store = _STORE.get(sess) or {}
+        for k in [
+            k
+            for k in store
+            if (sf_dir is None or k[0] in (sf_dir, ""))
+            and (family is None or k[1] == family)
+        ]:
+            _release(sess, store.pop(k))
+        if sf_dir is None and family is None:
+            _STORE.pop(sess, None)
+            _UNMANAGED.pop(sess, None)
 
 
 def note_unmanaged(spark: SparkSession, family: str, n_bytes: int) -> None:
@@ -207,33 +262,12 @@ def boundary_stats() -> dict:
 
 
 def query_boundary(spark: SparkSession) -> dict:
-    """Bound within-dataset session state at a SAFE point — between
-    registry queries, where no memo build is in flight (evicting
-    mid-build would release a half-built family's checkpoint pins and
-    fail the query). Called by registry._pinned before every query.
-
-    Always: drop terminated streaming-query handles (their retained
-    progress buffers accumulate per stream drain). Then, only if
-    pinned state exceeds the budget: evict least-recently-touched
-    families until back under. The two most-recently-touched families
-    are NEVER evicted here (see the loop comment) — same-family bursts
-    keep their memo, and the worst-case bound is budget + the last two
-    families' working sets (documented in the module docstring).
-
-    Retained-frame hazard (ADVICE r10 #2): eviction here releases pins
-    that DataFrames RETURNED BY EARLIER registry queries may still
-    reference. Plain-persisted frames silently recompute on next
-    access; localCheckpoint-pinned frames (operators/ids.py) and the
-    dropped Derby landing FAIL-STOP instead — lineage was truncated, so
-    recompute is impossible by design. A caller holding result frames
-    across queries in an over-budget session must either re-invoke the
-    registry query (always rebuilds from source) or raise
-    $SPARK_GRAFT_STATE_BUDGET_MB; under budget nothing is ever
-    released. Checkpoint pins are NOT downgraded to plain unpersist to
-    dodge this: the pins exist to cut quadratic lineage (log-round
-    label propagation), and keeping a recompute path would keep that
-    lineage alive on the executors — the fail-stop is the cheaper,
-    explicit contract (tests/test_edges.py pins it)."""
+    """Apply the state budget between registry queries (policy 2 in the
+    module docstring). Always drops terminated streaming-query handles
+    first: their retained progress buffers accumulate per stream drain.
+    A caller holding result frames across queries in an over-budget
+    session must re-invoke the registry query or raise the budget (see
+    the loss semantics in the module docstring)."""
     try:
         spark.streams.resetTerminated()
     except Exception:  # noqa: BLE001 - no streaming, stopped JVM
@@ -245,25 +279,11 @@ def query_boundary(spark: SparkSession) -> dict:
     if before <= budget:
         return stats
     t0 = time.monotonic()
-    lru = _FAMILY_LRU.get(spark) or []
-    # oldest-first; the TWO most-recently-touched entries are never
-    # evicted here: a memo build touches its own family first and then
-    # the catalog scans it loads through (star → catalog nesting), so
-    # at query end the just-built family is the SECOND-most-recent
-    # entry — protecting only the MRU would evict the very frames the
-    # burst is about to reuse
-    for sf_dir, family in list(lru[:-2]):
-        fn = _FAMILIES.get(family)
-        if fn is None:
-            continue
-        try:
-            fn(spark, sf_dir or None)
-        except Exception:  # noqa: BLE001 - same tolerance as evict()
-            pass
-        try:
-            lru.remove((sf_dir, family))
-        except ValueError:
-            pass
+    store = _STORE.get(spark) or {}
+    # (sf_dir, family) groups, least-recently-used first
+    groups = list(dict.fromkeys((d, f) for d, f, _ in reversed(store)))[::-1]
+    for sf_dir, family in groups[:-2]:
+        evict(spark, sf_dir, family)
         stats["evicted"].append(family)
         # unpersist is async for plain persists — poll the block
         # manager (capped) instead of a fixed settle (VERDICT r10
@@ -280,7 +300,7 @@ def query_boundary(spark: SparkSession) -> dict:
     stats["after"] = pinned_bytes(spark)
     stats["sec"] = round(time.monotonic() - t0, 3)
     if not stats["evicted"]:
-        # Over budget but nothing evictable (LRU <= 2 families, all
+        # Over budget but nothing evictable (≤ 2 groups, all
         # protected): don't count this as an evicting boundary or burn
         # an event slot — a session stuck over budget would otherwise
         # fill the event cap with no-op entries and starve real
@@ -304,73 +324,9 @@ def query_boundary(spark: SparkSession) -> dict:
     return stats
 
 
-def evict(spark: SparkSession | None = None, sf_dir: str | None = None) -> None:
-    """Evict (and unpersist) every registered module cache matching
-    the (session, dataset) scope; ``None`` is a wildcard on either
-    axis. ``evict()`` with no args clears the process. Evictor
-    failures are swallowed per-fn: a stopped session's unpersist
-    raising must still let every other module drop its (now dead)
-    handles."""
-    for fn in _EVICTORS:
-        try:
-            fn(spark, sf_dir)
-        except Exception:  # noqa: BLE001
-            pass
-    for sess in list(_LRU) if spark is None else [spark]:
-        dirs = _LRU.get(sess)
-        if dirs is None:
-            continue
-        if sf_dir is None:
-            _LRU.pop(sess, None)
-        else:
-            _LRU[sess] = [d for d in dirs if d != sf_dir]
-    # keep the family-level bookkeeping consistent with what the
-    # fan-out just evicted
-    for sess in list(_FAMILY_LRU) if spark is None else [spark]:
-        lru = _FAMILY_LRU.get(sess)
-        if lru is None:
-            continue
-        if sf_dir is None:
-            _FAMILY_LRU.pop(sess, None)
-            _UNMANAGED.pop(sess, None)
-        else:
-            _FAMILY_LRU[sess] = [
-                (d, f) for d, f in lru if d and d != sf_dir
-            ]
-
-
-def dataset_cap() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CACHE_DATASETS", "4"))
-
-
-def touch(spark: SparkSession, sf_dir: str) -> None:
-    """Record a dataset access; evict the least-recently-used
-    dataset's caches once the session exceeds the dataset cap. Called
-    from ``catalog.load_table`` — the chokepoint every query path
-    reads tables through. Also prunes entries for OTHER sessions whose
-    SparkContext has stopped (e.g. sc.stop() bypassed the hooked
-    spark.stop): their module memos hold dead DataFrame handles."""
-    for sess in [s for s in list(_LRU) if s is not spark and _is_stopped(s)]:
-        evict(sess)
-    lru = _LRU.setdefault(spark, [])
-    if lru and lru[-1] == sf_dir:
-        return  # hot path: repeated loads of the current dataset
-    if sf_dir in lru:
-        lru.remove(sf_dir)
-    lru.append(sf_dir)
-    cap = dataset_cap()
-    while len(lru) > cap:
-        old = lru.pop(0)
-        for fn in _EVICTORS:
-            try:
-                fn(spark, old)
-            except Exception:  # noqa: BLE001 - same tolerance as evict()
-                pass
-
-
 def hook_session(spark: SparkSession) -> None:
     """Wrap ``spark.stop`` so session shutdown evicts the session's
-    caches first. Safe to call repeatedly (guards on a marker)."""
+    entries first. Safe to call repeatedly (guards on a marker)."""
     if getattr(spark, "_sg_cache_stop_hooked", False):
         return
     orig_stop = spark.stop

@@ -20,11 +20,12 @@ makes the MinHash signatures oracle-checkable in DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 import random
 
+from .. import cachereg
 from ..functions.text import fingerprint
 
 # Affine MinHash family h_i(x) = (a_i*x + b_i) mod p over a 32-bit base
@@ -395,53 +396,6 @@ def prefix_filter_pairs(
     )
 
 
-# The FINAL labels frame returned by connected_components is a
-# localCheckpoint (corpus-sized at scale). Intermediate generations are
-# released inside the loop, but the returned one outlives the call —
-# so it is registered here per SESSION and released when the NEXT
-# invocation on that session supersedes it, or when cachereg evicts
-# (ADVICE r5 item 1 — mirrors corpus.py's _TRANSIENT_PINS/_repin). At
-# most one labels checkpoint is live per session; a caller that holds
-# the previous result past the next invocation fail-stops on access
-# (the module's designed loss semantics, ids.py::release_pins).
-# Weakly keyed (ADVICE r6): a session stopped via sc.stop() — which
-# bypasses the hooked stop — must not keep its pinned checkpoint
-# entry alive until some other session's touch() happens by.
-import weakref  # noqa: E402
-
-_CC_PINS: "weakref.WeakKeyDictionary[SparkSession, list[DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _cc_repin(spark: SparkSession, frame: DataFrame) -> None:
-    from .. import cachereg
-    from .ids import release_pins
-
-    # session-scoped (the operator never sees sf_dir) — the family LRU
-    # entry uses the empty sf_dir, and clear_cc_pins ignores it anyway
-    cachereg.touch_family(spark, "", "dedup_cc")
-    release_pins(_CC_PINS.pop(spark, []))
-    _CC_PINS[spark] = [frame]
-
-
-def clear_cc_pins(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """cachereg evictor: labels pins are session-scoped (the operator
-    never sees sf_dir), so ANY eviction touching the session releases
-    them — re-running the owning query rebuilds and re-pins."""
-    from .ids import release_pins
-
-    for sess in [s for s in _CC_PINS if spark is None or s is spark]:
-        release_pins(_CC_PINS.pop(sess))
-
-
-from .. import cachereg  # noqa: E402  (leaf module, no cycle)
-
-cachereg.register_family("dedup_cc", clear_cc_pins)
-
-
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
@@ -480,7 +434,6 @@ def connected_components(
     new ⋈ old label join (r12; guide §2.4 — one exchange per round,
     not two).
     """
-    from .ids import release_pins
     sym = edges.select(
         F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
     ).union(edges.select(F.col(dst_col).alias("__src"), F.col(src_col).alias("__dst")))
@@ -530,13 +483,19 @@ def connected_components(
         )
         # new_gen is materialized (eager checkpoint) and `changed`
         # has consumed it — the old generation's blocks can go now.
-        release_pins([gen])
+        cachereg.release_pins([gen])
         gen = new_gen
         labels = new_gen.select("__id", "cluster_id")
         if changed == 0:
             break
     adj.unpersist()
-    _cc_repin(vertices.sparkSession, gen)
+    # The final generation outlives the call. At most one labels
+    # checkpoint lives per session: the next invocation releases this
+    # one, so a caller holding a result past it fail-stops on access
+    # (release_pins). Session-scoped — the operator never sees sf_dir.
+    spark = vertices.sparkSession
+    cachereg.evict(spark, family="dedup_cc")
+    cachereg.memo(spark, "", "dedup_cc", "labels", lambda: cachereg.pin(gen))
     return labels.select(F.col("__id").alias(id_col), "cluster_id")
 
 

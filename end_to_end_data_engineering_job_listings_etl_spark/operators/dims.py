@@ -31,6 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cachereg import pin
 from .ids import ranked_ids, ranked_ids_grouped
 
 
@@ -101,7 +102,6 @@ def build_dim(
 def build_dims_batched(
     specs: Sequence[tuple[str, DataFrame, Sequence[Column], str]],
     n_parts: int | None = None,
-    shared_out: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """Build MANY dimensions in one pass: union every dim's (tagged,
     normalized, null-rejected) key projection, distinct ONCE, rank
@@ -119,11 +119,10 @@ def build_dims_batched(
     types would need per-position casts).
 
     Lifetime: every returned dim is a slice of ONE internally
-    ``persist()``-ed ranked frame, retained until the session ends or
-    the caller unpersists it — pass ``shared_out`` (a list the shared
-    frame is appended to) to take ownership; memo layers above
-    (plans/star.py, plans/joblistings.py) do so and expose
-    ``clear_caches(spark)`` as the eviction hook."""
+    ``persist()``-ed ranked frame. It is ``cachereg.pin``-ned, so a
+    memo build above (plans/star.py, plans/joblistings.py) owns it and
+    eviction releases it; outside a build it lives until the session
+    ends."""
     arity = max(len(k) for _, _, k, _ in specs)
     parts = []
     names: dict[str, tuple[list[str], str]] = {}
@@ -153,12 +152,10 @@ def build_dims_batched(
         # the distinct's shuffle output is stage-reused by the
         # sampling and exchange jobs — no input pin needed
         pin_input=False,
-        # hand the internal checkpoint to the same owner as the
-        # persisted frame, so eviction releases BOTH (ids.release_pins)
-        pinned_out=shared_out,
-    ).persist()
-    if shared_out is not None:
-        shared_out.append(ranked)
+    )
+    # the internal checkpoint is pinned to the same owner, so eviction
+    # releases both
+    ranked = pin(ranked.persist())
     out: dict[str, DataFrame] = {}
     for tag, (cols, sk_name) in names.items():
         out[tag] = ranked.filter(F.col("__tag") == tag).select(

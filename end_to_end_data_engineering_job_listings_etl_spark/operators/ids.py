@@ -46,6 +46,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cachereg import pin
+
 _PID = "__range_pid"
 
 
@@ -63,33 +65,11 @@ def _n_parts(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
 
-def release_pins(frames: Sequence[DataFrame]) -> None:
-    """Unpersist the checkpoint blocks behind localCheckpoint-pinned
-    frames (``DataFrame.unpersist`` can't: a checkpointed frame is a
-    ``LogicalRDD``, not a cache-manager entry — its blocks are pinned
-    at the RDD level). Used by the memo caches' eviction hooks so an
-    evicted dataset leaves ZERO orphaned persisted RDDs. Plain
-    persisted frames in ``frames`` are unpersisted normally. After
-    release, a retained handle to a pinned frame FAIL-STOPS on next
-    access (the module's designed loss semantics)."""
-    for df in frames:
-        try:
-            df.unpersist()
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                plan.rdd().unpersist(True)
-        except Exception:  # noqa: BLE001 - release is best-effort:
-            # a stopped session's frames are already gone with its
-            # executors; eviction of a dead session must not raise
-            pass
-
-
 def _ranged_with_pid(
     df: DataFrame,
     order_cols: Sequence[Column | str],
     n_parts: int | None,
     pin_input: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, list[Column]]:
     """Range-repartition on the ordering key and PIN the resulting
     (pid, row) assignment with a lazy localCheckpoint — see module
@@ -103,16 +83,12 @@ def _ranged_with_pid(
     # on the ranged+pid frame below): callers whose upstream is already
     # a persisted frame (dim distincts over the cached landing) pass
     # pin_input=False and skip this materialization's job entirely.
-    pinned = df.localCheckpoint(eager=False) if pin_input else df
-    ranged = (
+    pinned = pin(df.localCheckpoint(eager=False)) if pin_input else df
+    ranged = pin(
         pinned.repartitionByRange(n_parts or _n_parts(df), *sort_exprs)
         .select(F.spark_partition_id().alias(_PID), "*")
         .localCheckpoint(eager=False)
     )
-    if pinned_out is not None:
-        if pin_input:
-            pinned_out.append(pinned)
-        pinned_out.append(ranged)
     return ranged, sort_exprs
 
 
@@ -141,19 +117,16 @@ def ranked_ids(
     start: int = 0,
     n_parts: int | None = None,
     pin_input: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """``start + row_number() OVER (ORDER BY order_cols)`` as an INT
     column, computed with the range/two-phase plan above. Output
     columns: ``df``'s columns plus ``id_name``. ``pin_input=False``
     skips the input checkpoint when the caller's upstream is already
-    persisted (cheap to scan twice). ``pinned_out`` receives the
-    checkpointed frames so memoizing callers can ``release_pins``
-    them on eviction — without it the checkpoint blocks live until
-    the JVM's ContextCleaner notices the plan is garbage."""
-    ranged, sort_exprs = _ranged_with_pid(
-        df, order_cols, n_parts, pin_input, pinned_out
-    )
+    persisted (cheap to scan twice). The checkpointed frames are
+    ``cachereg.pin``-ned: inside a memo build, evicting the entry
+    releases them; outside one their blocks live until the JVM's
+    ContextCleaner notices the plan is garbage."""
+    ranged, sort_exprs = _ranged_with_pid(df, order_cols, n_parts, pin_input)
     w_in = Window.partitionBy(_PID).orderBy(*sort_exprs)
     numbered = ranged.select("*", F.row_number().over(w_in).alias("__rn"))
     out = _with_offsets(numbered, F.lit(1))
@@ -173,7 +146,6 @@ def ranked_ids_grouped(
     start: int = 0,
     n_parts: int | None = None,
     pin_input: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Per-group ``start + row_number() OVER (PARTITION BY group
     ORDER BY order_cols)`` with the same range/two-phase plan — the
@@ -189,16 +161,12 @@ def ranked_ids_grouped(
     running ``ranked_ids`` per group separately."""
     sort_exprs = _as_sort_exprs([group_col, *order_cols])
     in_group_exprs = _as_sort_exprs(order_cols)
-    pinned = df.localCheckpoint(eager=False) if pin_input else df
-    ranged = (
+    pinned = pin(df.localCheckpoint(eager=False)) if pin_input else df
+    ranged = pin(
         pinned.repartitionByRange(n_parts or _n_parts(df), *sort_exprs)
         .select(F.spark_partition_id().alias(_PID), "*")
         .localCheckpoint(eager=False)
     )
-    if pinned_out is not None:
-        if pin_input:
-            pinned_out.append(pinned)
-        pinned_out.append(ranged)
     w_in = Window.partitionBy(_PID, group_col).orderBy(*in_group_exprs)
     numbered = ranged.select("*", F.row_number().over(w_in).alias("__rn"))
     totals = ranged.groupBy(group_col, _PID).agg(F.count("*").alias("__total"))
@@ -232,16 +200,13 @@ def exclusive_prefix_sum(
     out_name: str,
     n_parts: int | None = None,
     pin_input: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """``sum(weight) OVER (ORDER BY order_cols ROWS UNBOUNDED
     PRECEDING AND 1 PRECEDING)`` (0 for the first row) via the same
     two-phase plan — the running-start form used to seed dense key
     blocks (e.g. first ordinal of each duplicate-tuple group).
-    ``pin_input`` / ``pinned_out`` as in ``ranked_ids``."""
-    ranged, sort_exprs = _ranged_with_pid(
-        df, order_cols, n_parts, pin_input, pinned_out
-    )
+    ``pin_input`` and pinning as in ``ranked_ids``."""
+    ranged, sort_exprs = _ranged_with_pid(df, order_cols, n_parts, pin_input)
     w_in = (
         Window.partitionBy(_PID)
         .orderBy(*sort_exprs)

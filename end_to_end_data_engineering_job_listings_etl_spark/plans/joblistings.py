@@ -29,12 +29,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cachereg
 from ..functions.dates import date_attributes
 from ..functions.keywords import extract_keywords
 from ..functions.normalize import norm_initcap, norm_upper, parse_string_array
 from ..functions.relative_time import parse_relative_time
 from ..operators.dims import build_dim, build_dims_batched
-from ..operators.ids import exclusive_prefix_sum, ranked_ids, release_pins
+from ..operators.ids import exclusive_prefix_sum, ranked_ids
 
 SKILL_KEYWORDS = (
     "sql", "python", "spark", "aws", "excel", "tableau", "java", "airflow",
@@ -46,7 +47,6 @@ def build_star_schema(
     landing: DataFrame,
     now: Column | None = None,
     sk_mode: str = "range",
-    shared_out: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """Landing job_listings → the 9 warehouse tables (reference
     ``dags/spark_etl_script.py:92-189``).
@@ -56,10 +56,10 @@ def build_star_schema(
     reference's utcnow()).
 
     With ``sk_mode="range"`` the five ranked dims are slices of one
-    internally persisted frame (operators.dims.build_dims_batched);
-    pass ``shared_out`` to take ownership of its lifetime, or call
-    this module's ``clear_caches`` if you went through the memoized
-    ``jl_*`` query layer."""
+    internally persisted frame (operators.dims.build_dims_batched). It
+    and the id checkpoints are ``cachereg.pin``-ned: the memoized
+    ``jl_*`` query layer owns them, and ``cachereg.evict`` releases
+    them."""
     if now is None:
         now = F.current_timestamp()
 
@@ -100,7 +100,6 @@ def build_star_schema(
             "__cnt",
             "__start",
             pin_input=False,
-            pinned_out=shared_out,
         ).select(
             *[F.col(c).alias(f"__k{i}") for i, c in enumerate(ordering)],
             "__start",
@@ -165,7 +164,7 @@ def build_star_schema(
         # One tagged union → one distinct → one grouped two-phase rank
         # for all five ranked dims (operators.dims.build_dims_batched)
         # instead of five independent distinct+rank pipelines.
-        batched = build_dims_batched(dim_specs, shared_out=shared_out)
+        batched = build_dims_batched(dim_specs)
         dim_company = batched["company"]
         dim_publisher = batched["publisher"]
         dim_employment_type = batched["employment_type"]
@@ -235,7 +234,6 @@ def build_star_schema(
         base.select("job_natural_key"),
         ["job_natural_key"],
         "job_posting_pk",
-        pinned_out=shared_out,
     )
     # the pk map has one row per posting — fact-scale, never pinned
     # to broadcast (a pinned 15M-row build OOMed the sf10 gate)
@@ -281,7 +279,6 @@ def landing_from_orders(
     spark: SparkSession,
     sf_dir: str,
     with_natural_key: bool = True,
-    pinned_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """A reference-shaped ``job_listings`` landing derived from the
     driver's parquet tables with pure column expressions — every column
@@ -326,7 +323,6 @@ def landing_from_orders(
             ),
             ["__t", "__e", "__u"],
             "job_natural_key",
-            pinned_out=pinned_out,
         ).select("o_orderkey", "job_natural_key")
         l = l.join(nk_map, "o_orderkey")  # one row per order: fact-scale, no pin
         key_cols = [F.col("job_natural_key")]
@@ -365,48 +361,16 @@ def landing_from_orders(
     )
 
 
-_JL_STAR_CACHE: dict[tuple[SparkSession, str], dict[str, DataFrame]] = {}
-_JL_STAR_SHARED: dict[tuple[SparkSession, str], list[DataFrame]] = {}
-
-
 def _jl_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Memoized star build over the parquet-derived landing: the nine
     per-table checked queries share one plan-construction pass."""
-    from .. import cachereg
-
-    cachereg.touch_family(spark, sf_dir, "jl_star")
-    key = (spark, sf_dir)
-    hit = _JL_STAR_CACHE.get(key)
-    if hit is None:
-        shared: list[DataFrame] = []
-        hit = build_star_schema(
-            landing_from_orders(spark, sf_dir, pinned_out=shared),
-            shared_out=shared,
-        )
-        _JL_STAR_CACHE[key] = hit
-        _JL_STAR_SHARED[key] = shared
-    return hit
-
-
-def clear_caches(
-    spark: SparkSession | None = None, sf_dir: str | None = None
-) -> None:
-    """Evict the memoized jl_* star builds and unpersist the batched
-    dim assigner's shared ranked frames. Either axis may be ``None``
-    (wildcard); registered with ``cachereg`` for automatic eviction
-    (see plans/star.py::clear_caches)."""
-    for key in [
-        k
-        for k in _JL_STAR_CACHE
-        if (spark is None or k[0] is spark) and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        _JL_STAR_CACHE.pop(key)
-        release_pins(_JL_STAR_SHARED.pop(key, []))
-
-
-from .. import cachereg  # noqa: E402  (leaf module, no cycle)
-
-cachereg.register_family("jl_star", clear_caches)
+    return cachereg.memo(
+        spark,
+        sf_dir,
+        "jl_star",
+        "star",
+        lambda: build_star_schema(landing_from_orders(spark, sf_dir)),
+    )
 
 
 def jl_fact_checked(spark: SparkSession, sf_dir: str) -> DataFrame:

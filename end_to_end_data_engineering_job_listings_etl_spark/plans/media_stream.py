@@ -29,6 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cachereg
 from ..catalog import load_table, load_table_dist
 
 # ---------------------------------------------------------------------------
@@ -732,8 +733,8 @@ def sink_observed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DERBY_HEAP_PER_CSV_BYTE = 2.5
 
 
-def _drop_derby_landing(spark: SparkSession | None = None, sf_dir=None) -> None:
-    """cachereg evictor for the embedded Derby landing DB: an
+def _drop_derby_landing(spark: SparkSession) -> None:
+    """Release action of the Derby landing's cachereg entry: an
     in-memory Derby database lives in unmanaged driver heap until
     explicitly dropped (``;drop=true``), which Derby signals with the
     EXPECTED SQLException 08006 — so the handler treats the exception
@@ -741,16 +742,12 @@ def _drop_derby_landing(spark: SparkSession | None = None, sf_dir=None) -> None:
     sf_dir; a retained ``src_jdbc_landing`` result frame read after
     the drop fail-stops (the module's designed loss semantics), and
     re-running the query rebuilds the DB from scratch."""
-    if spark is None:
-        return  # process-wide evict at exit — the JVM dies anyway
     try:
         spark._jvm.java.sql.DriverManager.getConnection(
             "jdbc:derby:memory:landing_db;drop=true"
         )
     except Exception:  # noqa: BLE001 - 08006 'database dropped' = success
         pass
-    from .. import cachereg
-
     cachereg.note_unmanaged(spark, "derby", 0)
 
 
@@ -875,14 +872,14 @@ def src_jdbc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver heap (invisible to the block manager) until dropped — in
     # r9 it was part of the accumulated state that OOMed long sf10
     # sessions. Report it to the state budget (estimate: the staged
-    # CSV bytes — Derby pages carry comparable volume) and register
-    # the drop evictor, so cachereg.query_boundary reclaims it when
-    # the session runs past the budget; the next call rebuilds the DB
-    # from scratch exactly as this call did.
-    from .. import cachereg
-
-    cachereg.register_family("derby", _drop_derby_landing)
-    cachereg.touch_family(spark, sf_dir, "derby")
+    # CSV bytes — Derby pages carry comparable volume) and keep a
+    # session-scoped entry whose release drops the DB, so
+    # cachereg.query_boundary reclaims it when the session runs past
+    # the budget. Every call rebuilds the DB from scratch, so the
+    # entry's build is empty: it records recency and the release.
+    cachereg.memo(
+        spark, "", "derby", "landing_db", lambda: None, _drop_derby_landing
+    )
     # Calibration (scripts_dev/derby_calib_r11.json, measured at sf10
     # in a 16 GB JVM): staged-CSV bytes UNDER-estimate Derby's actual
     # heap footprint ~2.5x (389 MB estimate vs 990 MB gc'd heap delta;

@@ -48,14 +48,14 @@ from end_to_end_data_engineering_job_listings_etl_spark.session import (  # noqa
 # memo the family pins (star: landing+dims+fact persist; jl_star: the
 # jl star bundle; catalog: the shared table scans; dedup_cc: the
 # label-propagation checkpoint pins; derby: the embedded JDBC landing;
-# corpus: the curation working set).
+# corpus: the MinHash-estimate scratch frames).
 FAMILY_REPS = {
     "star": "fact_orders",
     "jl_star": "jl_fact_checked",
     "catalog": "li_pricing_summary",
     "dedup_cc": "dd_duplicate_clusters",
     "derby": "src_jdbc_landing",
-    "corpus": "corpus_curation",
+    "corpus": "dd_minhash_estimate",
 }
 
 
@@ -135,10 +135,7 @@ def main() -> int:
             rebuilds.append({"family": family, "status": "no-oracled-rep"})
             continue
         # guarantee the checked run starts cold for this family
-        try:
-            cachereg._FAMILIES[family](spark, None)
-        except Exception:  # noqa: BLE001 - same tolerance as cachereg.evict
-            pass
+        cachereg.evict(spark, None, family)
         t0 = time.time()
         try:
             df = qs[rep](spark, sf_dir)

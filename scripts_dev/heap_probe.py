@@ -89,7 +89,7 @@ def derby_calibration(sf_dir: str, out: Path) -> int:
     est = cachereg.unmanaged_estimates(spark)
     est_mb = round(est.get("derby", 0) / 2**20, 1)
     # evict ONLY the derby family, then measure what came back
-    cachereg._FAMILIES["derby"](spark, None)
+    cachereg.evict(spark, None, "derby")
     post = jvm_stats(spark)
     delta_mb = after["heap_mb"] - before["heap_mb"]
     row = {

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_data_engineering_job_listings_etl_spark import cachereg, catalog, registry
-from end_to_end_data_engineering_job_listings_etl_spark.plans import joblistings, star
+from end_to_end_data_engineering_job_listings_etl_spark.plans import star
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
@@ -28,6 +28,27 @@ def _persistent_ids(spark) -> set[int]:
     while it.hasNext():
         out.add(it.next()._1())
     return out
+
+
+def _store(spark) -> dict:
+    """The session's memo store: (sf_dir, family, key) -> entry."""
+    return cachereg._STORE.get(spark, {})
+
+
+def _dirs(spark, family: str, key) -> set[str]:
+    """sf_dirs holding a (family, key) entry in the session's store."""
+    return {d for d, f, k in _store(spark) if f == family and k == key}
+
+
+def _keys(spark, family: str) -> set:
+    return {k for _, f, k in _store(spark) if f == family}
+
+
+def _families(spark) -> list[str]:
+    """Families of the session's (sf_dir, family) groups, least
+    recently used first — the order query_boundary evicts in."""
+    groups = dict.fromkeys((d, f) for d, f, _ in reversed(_store(spark)))
+    return [f for _, f in reversed(groups)]
 
 
 def _drop_persistent_blocks(spark, only_ids=None) -> None:
@@ -67,9 +88,10 @@ def test_two_datasets_full_bi_zero_orphans(spark):
     assert created  # the memos really did pin frames
     cachereg.evict(spark)
     assert not (_persistent_ids(spark) & created)  # zero orphans
-    assert not star._LANDING_CACHE and not star._PLAN_CACHE
-    assert not star._DIMS_BUNDLE_CACHE and not star._DIMS_SHARED
-    assert not catalog._DIST_CACHE
+    star_keys = _keys(spark, "star")
+    assert "landing" not in star_keys and not star_keys - {"landing", "dims_bundle"}
+    assert "dims_bundle" not in star_keys  # the entry owns the shared frames
+    assert not {k for k in _keys(spark, "catalog") if k[0] == "dist"}
     # post-eviction rebuild: caches repopulate and results still flow
     qs = registry.all_queries()
     assert qs["bi_total_postings"](spark, SF_A).count() == 1
@@ -81,23 +103,67 @@ def test_sf_dir_scoped_eviction(spark):
     cachereg.evict()
     star.landing(spark, SF_A)
     star.landing(spark, SF_B)
-    assert {k[1] for k in star._LANDING_CACHE} == {SF_A, SF_B}
+    assert _dirs(spark, "star", "landing") == {SF_A, SF_B}
     cachereg.evict(spark, SF_A)
-    assert {k[1] for k in star._LANDING_CACHE} == {SF_B}
+    assert _dirs(spark, "star", "landing") == {SF_B}
     cachereg.evict(spark)
 
 
 def test_lru_dataset_cap_evicts_oldest(spark, monkeypatch):
-    """Touching more than $SPARK_GRAFT_CACHE_DATASETS distinct sf_dirs
+    """Touching more than cachereg.DATASET_CAP distinct sf_dirs
     auto-evicts the least-recently-used dataset's caches."""
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_DATASETS", "2")
+    monkeypatch.setattr(cachereg, "DATASET_CAP", 2)
     cachereg.evict()
     star.landing(spark, SF_A)  # touch 1 (and pin frames)
     star.landing(spark, SF_B)  # touch 2
-    assert {k[1] for k in star._LANDING_CACHE} == {SF_A, SF_B}
+    assert _dirs(spark, "star", "landing") == {SF_A, SF_B}
     catalog.load_table(spark, "/root/testdata/sf0.1", "region").count()  # touch 3
     # SF_A was least-recently-used → its pinned landing is gone
-    assert {k[1] for k in star._LANDING_CACHE} == {SF_B}
+    assert _dirs(spark, "star", "landing") == {SF_B}
+    cachereg.evict(spark)
+
+
+# One representative query per DataFrame-owning family, as in
+# scripts_dev/evict_rebuild_probe.py::FAMILY_REPS.
+_FAMILY_REPS = {
+    "star": "fact_orders",
+    "jl_star": "jl_fact_checked",
+    "catalog": "li_pricing_summary",
+    "corpus": "dd_minhash_estimate",
+    "dedup_cc": "dd_duplicate_clusters",
+}
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILY_REPS))
+def test_family_eviction_releases_only_that_family(spark, family):
+    """evict(spark, family=f) releases every persistent RDD f's entries
+    pinned and leaves every other family's entries in place; the
+    representative query then rebuilds to the same row count. The
+    first run warms the families f nests over, so the second run's new
+    RDDs are f's own."""
+    qs = registry.all_queries()
+    rep = _FAMILY_REPS[family]
+    cachereg.evict(spark)
+
+    def run() -> int:
+        df = qs[rep](spark, SF_A)
+        df.write.format("noop").mode("overwrite").save()
+        return df.count()
+
+    n_rows = run()
+    cachereg.evict(spark, family=family)
+    baseline = _persistent_ids(spark)
+    assert run() == n_rows
+    created = _persistent_ids(spark) - baseline
+    assert _keys(spark, family)
+    others = {k: e for k, e in _store(spark).items() if k[1] != family}
+    cachereg.evict(spark, family=family)
+    assert not _keys(spark, family)
+    assert not (_persistent_ids(spark) & created)
+    after = {k: e for k, e in _store(spark).items() if k[1] != family}
+    assert after.keys() == others.keys()
+    assert all(after[k] is e for k, e in others.items())
+    assert run() == n_rows
     cachereg.evict(spark)
 
 
@@ -114,24 +180,21 @@ def test_session_stop_hook_wraps_and_evicts():
 
     calls = []
     fake = FakeSession()
-
-    def spy(spark, sf_dir):
-        calls.append((spark, sf_dir))
-
-    cachereg.register_evictor(spy)
+    cachereg.memo(fake, "/x", "probe", 0, lambda: None, calls.append)
     try:
         cachereg.hook_session(fake)
         assert fake._sg_cache_stop_hooked
         before = len(calls)
         fake.stop()
         assert fake.stopped
-        assert (fake, None) in calls[before:]
+        assert fake in calls[before:]  # its entries were released
+        assert fake not in cachereg._STORE
         # idempotent: re-hooking must not double-wrap
         saved = fake.stop
         cachereg.hook_session(fake)
         assert fake.stop is saved
     finally:
-        cachereg._EVICTORS.remove(spy)
+        cachereg.evict(fake)
 
 
 def test_real_session_is_stop_hooked(spark):
@@ -165,6 +228,10 @@ def test_local_checkpoint_loss_fail_stop(spark):
         cachereg.evict()
 
 
+def _cc_pins(spark) -> list:
+    return [p for (_, f, _), e in _store(spark).items() if f == "dedup_cc" for p in e.pins]
+
+
 def test_connected_components_pins_released_on_reinvocation(spark):
     """ADVICE r5 item 1: the FINAL labels checkpoint returned by
     connected_components is registered per session and released when
@@ -180,7 +247,7 @@ def test_connected_components_pins_released_on_reinvocation(spark):
     )
     out1 = dedup.connected_components(verts, edges)
     assert out1.count() == 100
-    assert len(dedup._CC_PINS.get(spark, [])) == 1
+    assert len(_cc_pins(spark)) == 1
     first_created = _persistent_ids(spark) - baseline
     assert first_created  # the labels checkpoint really is pinned
     out2 = dedup.connected_components(verts, edges)
@@ -188,80 +255,73 @@ def test_connected_components_pins_released_on_reinvocation(spark):
     # the first invocation's checkpoint blocks are gone...
     assert not (_persistent_ids(spark) & first_created)
     # ...and only one generation is registered
-    assert len(dedup._CC_PINS.get(spark, [])) == 1
+    assert len(_cc_pins(spark)) == 1
     # cachereg eviction releases the survivor: zero orphans
     cachereg.evict(spark)
-    assert spark not in dedup._CC_PINS
+    assert not _keys(spark, "dedup_cc")
     assert not (_persistent_ids(spark) - baseline)
 
 
 def test_dead_session_pruned_on_touch(spark):
     """ADVICE r5 item 3: a session stopped OUTSIDE the hooked
     spark.stop (sc.stop(), or never hooked at all) must not retain its
-    _LRU entry and memo frames forever — touch() prunes entries whose
-    SparkContext reports stopped and fans out eviction for them."""
+    store entries and memo frames forever — every memo call (here the
+    load_table chokepoint) prunes sessions whose SparkContext reports
+    stopped and releases their entries."""
 
     class DeadSession:  # no sparkContext at all → _is_stopped() True
         pass
 
     dead = DeadSession()
-    cachereg._LRU[dead] = ["/some/sf_dir"]
     calls = []
-
-    def spy(sess, sf_dir):
-        calls.append((sess, sf_dir))
-
-    cachereg.register_evictor(spy)
+    cachereg.memo(dead, "/some/sf_dir", "probe", 0, lambda: None, calls.append)
     try:
-        cachereg.touch(spark, SF_A)
-        assert (dead, None) in calls  # evictors fanned out for it
-        assert dead not in cachereg._LRU
-        assert spark in cachereg._LRU  # the live session is untouched
+        catalog.load_table(spark, SF_A, "region")
+        assert dead in calls  # its entries were released
+        assert dead not in cachereg._STORE
+        assert spark in cachereg._STORE  # the live session is untouched
     finally:
-        cachereg._EVICTORS.remove(spy)
+        cachereg.evict(dead)
         cachereg.evict(spark)
 
 
 def test_lru_is_weakly_keyed():
-    """A session object whose last user reference dies leaves no _LRU
-    entry behind (WeakKeyDictionary), independent of any stop path."""
+    """A session object whose last user reference dies leaves no
+    _STORE entry behind (WeakKeyDictionary), independent of any stop
+    path."""
     import gc
 
     class GhostSession:
         pass
 
     ghost = GhostSession()
-    cachereg._LRU[ghost] = ["/x"]
-    n_with_ghost = len(cachereg._LRU)
+    cachereg.memo(ghost, "/x", "probe", 0, lambda: None)
+    n_with_ghost = len(cachereg._STORE)
     del ghost
     gc.collect()
-    assert len(cachereg._LRU) == n_with_ghost - 1
+    assert len(cachereg._STORE) == n_with_ghost - 1
 
 
 def test_evictor_failure_does_not_wedge_eviction():
-    """evict() swallows a single evictor's exception so every other
-    module still drops its handles (dead-JVM unpersist tolerance)."""
+    """evict() swallows a single entry's release exception so every
+    other entry still drops its handles (dead-JVM unpersist tolerance)."""
 
     calls = []
 
-    def bad(sess, sf_dir):
+    def bad(sess):
         raise RuntimeError("dead JVM")
-
-    def good(sess, sf_dir):
-        calls.append((sess, sf_dir))
 
     class Sentinel:
         pass
 
     sentinel = Sentinel()
-    cachereg._EVICTORS.insert(0, bad)
-    cachereg.register_evictor(good)
+    cachereg.memo(sentinel, "/x", "probe", "bad", lambda: None, bad)
+    cachereg.memo(sentinel, "/x", "probe", "good", lambda: None, calls.append)
     try:
         cachereg.evict(sentinel)
-        assert (sentinel, None) in calls
+        assert sentinel in calls
     finally:
-        cachereg._EVICTORS.remove(bad)
-        cachereg._EVICTORS.remove(good)
+        cachereg.evict(sentinel)
 
 
 # ---------------------------------------------------------------------------
@@ -276,12 +336,12 @@ def test_query_boundary_noop_under_budget(spark, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_STATE_BUDGET_MB", raising=False)
     qs = registry.all_queries()
     qs["fact_orders"](spark, SF_A).write.format("noop").mode("overwrite").save()
-    assert star._PLAN_CACHE and star._LANDING_CACHE
+    assert _dirs(spark, "star", "star_wide") and _dirs(spark, "star", "landing")
     stats = cachereg.query_boundary(spark)
     # sf0.001 pinned state is far below the default 40%-of-heap budget
     assert stats["before"] <= stats["budget"]
     assert stats["evicted"] == []
-    assert star._PLAN_CACHE and star._LANDING_CACHE
+    assert _dirs(spark, "star", "star_wide") and _dirs(spark, "star", "landing")
     cachereg.evict(spark)
 
 
@@ -295,14 +355,14 @@ def test_query_boundary_evicts_lru_family_over_budget(spark, monkeypatch):
     qs = registry.all_queries()
     qs["fact_orders"](spark, SF_A).write.format("noop").mode("overwrite").save()
     qs["jl_fact_checked"](spark, SF_A).write.format("noop").mode("overwrite").save()
-    assert joblistings._JL_STAR_CACHE
-    lru_before = [f for _, f in cachereg._FAMILY_LRU.get(spark, [])]
+    assert _dirs(spark, "jl_star", "star")
+    lru_before = _families(spark)
     assert set(lru_before) >= {"star", "jl_star", "catalog"}
     stats = cachereg.query_boundary(spark)
     assert stats["before"] > stats["budget"]
     assert stats["evicted"], "over-budget boundary must evict something"
     # the two most-recently-touched families survive
-    survivors = [f for _, f in cachereg._FAMILY_LRU.get(spark, [])]
+    survivors = _families(spark)
     assert len(survivors) >= 2
     assert survivors == lru_before[-2:]
     for f in stats["evicted"]:
@@ -313,7 +373,7 @@ def test_query_boundary_evicts_lru_family_over_budget(spark, monkeypatch):
 
 def test_unmanaged_note_and_derby_drop(spark):
     """src_jdbc_landing reports its in-memory Derby footprint to the
-    budget; the registered family evictor drops the DB (expected
+    budget; its store entry's release action drops the DB (expected
     SQLException 08006 = success) and clears the note. A fresh call
     rebuilds the DB from scratch."""
     from end_to_end_data_engineering_job_listings_etl_spark.plans import media_stream
@@ -322,7 +382,7 @@ def test_unmanaged_note_and_derby_drop(spark):
     n1 = df.count()
     assert n1 > 0
     assert cachereg._UNMANAGED.get(spark, {}).get("derby", 0) > 0
-    assert "derby" in cachereg._FAMILIES
+    assert ("", "derby", "landing_db") in _store(spark)
 
     media_stream._drop_derby_landing(spark)
     assert cachereg._UNMANAGED.get(spark, {}).get("derby", 0) == 0
@@ -405,3 +465,22 @@ def test_unmanaged_estimates_accessor(spark):
     assert cachereg.unmanaged_estimates(spark)["probe_fam"] == 123
     cachereg.note_unmanaged(spark, "probe_fam", 0)
     assert "probe_fam" not in cachereg.unmanaged_estimates(spark)
+
+
+def test_replaced_parquet_gets_fresh_reader_plan(spark, tmp_path):
+    """ADVICE r13 #2: the reader-plan memo is keyed by the file's size
+    and mtime, so a parquet file replaced mid-session is read with its
+    new schema instead of the memoized stale plan."""
+    import pandas as pd
+
+    sf_dir = str(tmp_path)
+    path = tmp_path / "region.parquet"
+    pd.DataFrame({"r_regionkey": [0, 1]}).to_parquet(path, index=False)
+    assert catalog.load_table(spark, sf_dir, "region").columns == ["r_regionkey"]
+    pd.DataFrame({"r_regionkey": [0, 1], "r_name": ["A", "B"]}).to_parquet(
+        path, index=False
+    )
+    df = catalog.load_table(spark, sf_dir, "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(r["r_name"] for r in df.collect()) == ["A", "B"]
+    cachereg.evict(spark, sf_dir)

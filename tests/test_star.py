@@ -49,37 +49,44 @@ def test_fact_left_joins_preserve_orders(spark):
 
 def test_clear_caches_evicts_and_unpersists(spark):
     """ADVICE r3: the memo layers retained persisted frames for the
-    process lifetime with no eviction hook. clear_caches(spark) must
-    empty this session's memo entries and unpersist the dims bundle's
-    shared ranked frame — and a rebuild afterwards must still produce
-    the same dimension."""
+    process lifetime with no eviction hook. Evicting the star family
+    must empty this session's star entries and unpersist the dims
+    bundle's shared ranked frame — and a rebuild afterwards must still
+    produce the same dimension."""
+    from end_to_end_data_engineering_job_listings_etl_spark import cachereg
+
     before = {r["company_sk"]: r["employer_name"] for r in star.dim_company(spark, SF_DIR).collect()}
-    key = (spark, SF_DIR)
-    assert key in star._DIMS_BUNDLE_CACHE
-    shared = star._DIMS_SHARED[key]
-    # shared holds the memory-persisted ranked frame plus the ids-layer
-    # checkpoint pins (LogicalRDD frames, not cache-manager entries)
+    store = cachereg._STORE[spark]
+    key = (SF_DIR, "star", "dims_bundle")
+    assert key in store
+    shared = store[key].pins
+    # the entry's pins hold the memory-persisted ranked frame plus the
+    # ids-layer checkpoint pins (LogicalRDD frames, not cache-manager
+    # entries)
     assert any(f.storageLevel.useMemory for f in shared)
-    star.clear_caches(spark)
-    assert key not in star._DIMS_BUNDLE_CACHE
-    assert not any(k[1] is spark for k in star._PLAN_CACHE)
-    assert key not in star._LANDING_CACHE
+    cachereg.evict(spark, family="star")
+    assert key not in store
+    assert not any(f == "star" for _, f, _ in store)
+    assert (SF_DIR, "star", "landing") not in store
     assert all(not f.storageLevel.useMemory for f in shared)
     after = {r["company_sk"]: r["employer_name"] for r in star.dim_company(spark, SF_DIR).collect()}
     assert after == before
 
 
 def test_jl_clear_caches_roundtrip(spark):
+    from end_to_end_data_engineering_job_listings_etl_spark import cachereg
     from end_to_end_data_engineering_job_listings_etl_spark.plans import joblistings as jl
 
     before = jl.jl_fact_checked(spark, SF_DIR).count()
-    key = (spark, SF_DIR)
-    assert key in jl._JL_STAR_CACHE
-    shared = jl._JL_STAR_SHARED[key]
-    # shared holds persisted ranked frames plus ids-layer checkpoint
-    # pins (LogicalRDD frames, which never show a cache storage level)
+    store = cachereg._STORE[spark]
+    key = (SF_DIR, "jl_star", "star")
+    assert key in store
+    shared = store[key].pins
+    # the entry's pins hold persisted ranked frames plus ids-layer
+    # checkpoint pins (LogicalRDD frames, which never show a cache
+    # storage level)
     assert any(f.storageLevel.useMemory for f in shared)
-    jl.clear_caches(spark)
-    assert key not in jl._JL_STAR_CACHE
+    cachereg.evict(spark, family="jl_star")
+    assert key not in store
     assert all(not f.storageLevel.useMemory for f in shared)
     assert jl.jl_fact_checked(spark, SF_DIR).count() == before
